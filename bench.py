@@ -599,10 +599,6 @@ def main() -> None:
     # The session's 1 MB split target (set at build_session above) makes
     # the scratch corpus read fan out across the worker threads the way
     # a natural multi-thousand-split production scan would.
-    # checkpoint=False below: internal hash-frame pins go to DISK_ONLY
-    # persists instead of executor-heap localCheckpoints — with the
-    # corpus streaming from storage, nothing media-sized ever occupies
-    # storage memory (the 100 TB posture end to end).
     media_dir = tempfile.mkdtemp(prefix="bench_media_")
 
     def _media_corpus(name, gen):
@@ -626,8 +622,7 @@ def main() -> None:
         def image_dedup_step():
             with img_bound:
                 MMOD.image_dedup_flags(
-                    img_corpus, "doc_id", algo="dhash", max_hamming=4,
-                    checkpoint=False,
+                    img_corpus, "doc_id", algo="dhash", max_hamming=4
                 ).count()
 
         # warm the Arrow hash path once
@@ -647,7 +642,7 @@ def main() -> None:
         def audio_dedup_step():
             with aud_bound:
                 MMOD.audio_dedup_flags(
-                    aud_corpus, "doc_id", max_hamming=4, checkpoint=False
+                    aud_corpus, "doc_id", max_hamming=4
                 ).count()
 
         with aud_bound:
@@ -663,7 +658,7 @@ def main() -> None:
         def video_dedup_step():
             with vid_bound:
                 MMOD.video_dedup_flags(
-                    vid_corpus, "doc_id", n_frames=8, checkpoint=False
+                    vid_corpus, "doc_id", n_frames=8
                 ).count()
 
         with vid_bound:
@@ -680,9 +675,7 @@ def main() -> None:
 
         def audio_robust_step():
             with aur_bound:
-                MMOD.audio_robust_dedup_flags(
-                    aur_corpus, "doc_id", checkpoint=False
-                ).count()
+                MMOD.audio_robust_dedup_flags(aur_corpus, "doc_id").count()
 
         with aur_bound:
             MMOD.audio_robust_signatures(
@@ -696,9 +689,7 @@ def main() -> None:
 
         def video_robust_step():
             with vir_bound:
-                MMOD.video_robust_dedup_flags(
-                    vir_corpus, "doc_id", checkpoint=False
-                ).count()
+                MMOD.video_robust_dedup_flags(vir_corpus, "doc_id").count()
 
         with vir_bound:
             MMOD.video_frame_hash_signatures(

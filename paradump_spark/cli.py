@@ -1263,81 +1263,82 @@ def main(argv: list[str] | None = None) -> int:
 
         from paradump_spark.operators import multimodal as MM
 
-        # bytes-bounded vectorized reads over the payload table for the
-        # whole verb: default 4096-row reader batches are ~256 MB/task
-        # at 64 KB payloads and OOM a 16 g heap at corpus scale
-        MM.bound_media_session(spark, args.input)
-        src = spark.read.parquet(args.input)
-        # The hash/signature pipelines emit a hardcoded `doc_id` key
-        # column, so canonicalize the caller's id/payload columns on
-        # the way in and rename back on the way out.  Dropping a
-        # pre-existing `payload`/`doc_id` column first avoids the
-        # ambiguous-duplicate-column failure when the input carries
-        # both the custom column and one literally named like the
-        # canonical name (ADVICE r10).
-        work = src
-        if args.payload_col != "payload":
-            if "payload" in work.columns:
-                work = work.drop("payload")
-            work = work.withColumnRenamed(args.payload_col, "payload")
-        if args.id_col != "doc_id":
-            if "doc_id" in work.columns:
-                work = work.drop("doc_id")
-            work = work.withColumnRenamed(args.id_col, "doc_id")
-        if args.robust:
-            robust_fns = {
-                "audio": MM.audio_robust_dedup_flags,
-                "video": MM.video_robust_dedup_flags,
-            }
-            flagged = robust_fns[args.modality](
-                work, "doc_id", min_matches=args.min_matches
-            )
-        elif args.modality == "image":
-            flagged = MM.image_dedup_flags(
-                work, "doc_id", max_hamming=args.max_hamming
-            )
-        elif args.modality == "audio":
-            flagged = MM.audio_dedup_flags(
-                work, "doc_id", max_hamming=args.max_hamming
-            )
-        else:
-            flagged = MM.video_dedup_flags(
-                work, "doc_id", n_frames=args.n_frames,
-                max_hamming=args.max_hamming,
-            )
-        flag = f"is_{args.modality}_dup"
-        n_in = src.count()
-        if args.keep_flags:
-            out = flagged
+        # bytes-bounded vectorized reads over the payload table for
+        # every scan of the verb: default 4096-row reader batches are
+        # ~256 MB/task at 64 KB payloads and OOM a 16 g heap at corpus
+        # scale
+        with MM.bounded_media_reader(spark, args.input):
+            src = spark.read.parquet(args.input)
+            # The hash/signature pipelines emit a hardcoded `doc_id` key
+            # column, so canonicalize the caller's id/payload columns on
+            # the way in and rename back on the way out.  Dropping a
+            # pre-existing `payload`/`doc_id` column first avoids the
+            # ambiguous-duplicate-column failure when the input carries
+            # both the custom column and one literally named like the
+            # canonical name (ADVICE r10).
+            work = src
+            if args.payload_col != "payload":
+                if "payload" in work.columns:
+                    work = work.drop("payload")
+                work = work.withColumnRenamed(args.payload_col, "payload")
             if args.id_col != "doc_id":
-                out = out.withColumnRenamed("doc_id", args.id_col)
-            out.write.mode("overwrite").parquet(args.output)
-            # count the written parquet, not the lazy frame — re-counting
-            # `flagged` would re-run the band join + CC stages beyond the
-            # operators' internal checkpoints (ADVICE r10)
-            written = spark.read.parquet(args.output)
-            n_out = written.count()
-            n_dup = written.where(F.col(flag)).count()
-        else:
-            # kept corpus = original rows minus flagged near-dups (the
-            # robust pipelines project to signature rows, so semi-join
-            # the keeper ids back to preserve every input column).
-            # Pin the tiny (id, flag) projection once so the dedup
-            # graph executes exactly once across semi-join + summary.
-            flags_small = flagged.select("doc_id", flag).localCheckpoint(
-                eager=True
-            )
-            keep_ids = flags_small.where(~F.col(flag)).select(
-                F.col("doc_id").alias("__keep_id")
-            )
-            out = src.join(
-                keep_ids,
-                src[args.id_col] == F.col("__keep_id"),
-                "left_semi",
-            )
-            out.write.mode("overwrite").parquet(args.output)
-            n_out = spark.read.parquet(args.output).count()
-            n_dup = flags_small.where(F.col(flag)).count()
+                if "doc_id" in work.columns:
+                    work = work.drop("doc_id")
+                work = work.withColumnRenamed(args.id_col, "doc_id")
+            if args.robust:
+                robust_fns = {
+                    "audio": MM.audio_robust_dedup_flags,
+                    "video": MM.video_robust_dedup_flags,
+                }
+                flagged = robust_fns[args.modality](
+                    work, "doc_id", min_matches=args.min_matches
+                )
+            elif args.modality == "image":
+                flagged = MM.image_dedup_flags(
+                    work, "doc_id", max_hamming=args.max_hamming
+                )
+            elif args.modality == "audio":
+                flagged = MM.audio_dedup_flags(
+                    work, "doc_id", max_hamming=args.max_hamming
+                )
+            else:
+                flagged = MM.video_dedup_flags(
+                    work, "doc_id", n_frames=args.n_frames,
+                    max_hamming=args.max_hamming,
+                )
+            flag = f"is_{args.modality}_dup"
+            n_in = src.count()
+            if args.keep_flags:
+                out = flagged
+                if args.id_col != "doc_id":
+                    out = out.withColumnRenamed("doc_id", args.id_col)
+                out.write.mode("overwrite").parquet(args.output)
+                # count the written parquet, not the lazy frame — re-counting
+                # `flagged` would re-run the band join + CC stages beyond the
+                # operators' internal checkpoints (ADVICE r10)
+                written = spark.read.parquet(args.output)
+                n_out = written.count()
+                n_dup = written.where(F.col(flag)).count()
+            else:
+                # kept corpus = original rows minus flagged near-dups (the
+                # robust pipelines project to signature rows, so semi-join
+                # the keeper ids back to preserve every input column).
+                # Pin the tiny (id, flag) projection once so the dedup
+                # graph executes exactly once across semi-join + summary.
+                flags_small = flagged.select("doc_id", flag).localCheckpoint(
+                    eager=True
+                )
+                keep_ids = flags_small.where(~F.col(flag)).select(
+                    F.col("doc_id").alias("__keep_id")
+                )
+                out = src.join(
+                    keep_ids,
+                    src[args.id_col] == F.col("__keep_id"),
+                    "left_semi",
+                )
+                out.write.mode("overwrite").parquet(args.output)
+                n_out = spark.read.parquet(args.output).count()
+                n_dup = flags_small.where(F.col(flag)).count()
         mode = "robust " if args.robust else ""
         print(
             f"media-dedup {args.modality} ({mode}{'flags' if args.keep_flags else 'kept'}): "

@@ -672,6 +672,10 @@ def connected_components(
     (already pinned) edge set instead of the iterative rounds — see
     :data:`CC_DRIVER_EDGE_CAP`.  Pass ``0`` to force the distributed
     path (the scaling tests do).  Both paths return identical frames.
+    The default cap bounds driver memory assuming ~8-byte ids, so for
+    string ids (URL keys can be arbitrarily wide) the DEFAULT is
+    divided by 8; a cap the caller passes is used exactly as given,
+    whatever the id type.
 
     EAGER CONTRACT: this function runs Spark jobs at *call* time (the
     edge pin + the cap-check count, and under the cap one bounded
@@ -680,18 +684,14 @@ def connected_components(
     That is deliberate: the cap decision and the star/union-find path
     choice shape the returned plan, so they cannot be deferred.
     """
-    if driver_edge_cap is None:
-        driver_edge_cap = CC_DRIVER_EDGE_CAP
     from pyspark import StorageLevel
     from pyspark.sql import types as T
 
     id_type = edges.schema["id_a"].dataType
-    # the cap bounds driver memory assuming ~8-byte ids; string ids can
-    # be arbitrarily wide (URL keys), so scale the row budget down by a
-    # conservative width factor instead of collecting hundreds of MB
-    eff_cap = driver_edge_cap
-    if isinstance(id_type, T.StringType) and eff_cap:
-        eff_cap = max(1, eff_cap // 8)
+    if driver_edge_cap is None:
+        driver_edge_cap = CC_DRIVER_EDGE_CAP
+        if isinstance(id_type, T.StringType):
+            driver_edge_cap //= 8
     # Pin the edge set BEFORE anything consumes it: the vertex-set union
     # scans it twice and round 1's large-star once more — without this,
     # an expensive upstream edge pipeline (a 100k-vector kNN join, a
@@ -710,7 +710,7 @@ def connected_components(
     # blocks + a broadcast-sized label frame; the edge-id vertex set is
     # derived on the driver from the same collected rows, so the edge
     # frame is never scanned again.
-    if eff_cap and n_edges <= eff_cap:
+    if driver_edge_cap and n_edges <= driver_edge_cap:
         label_schema = T.StructType(
             [
                 T.StructField("id", id_type),
@@ -779,6 +779,11 @@ def connected_components(
     stars_count = None  # cached |stars| — saves one count job per round
     for rounds in range(1, max_iter + 1):
         sym = _large_star(sym).localCheckpoint(eager=True)
+        if rounds == 1:
+            # all_ids and round 1's large-star are checkpointed: nothing
+            # reads the edge pin any more, so release it now instead of
+            # leaving it cached in a long-lived session
+            pair.unpersist()
         new_stars = _small_star_directed(sym).localCheckpoint(eager=True)
         sym = new_stars.selectExpr("a AS src", "b AS dst").unionAll(
             new_stars.selectExpr("b AS src", "a AS dst")

@@ -3,11 +3,7 @@ metadata, processed via Arrow-batched ``mapInPandas``.
 
 Beyond-reference surface.  Real pipelines carry image/audio/video bytes in
 a ``binary`` column next to a metadata struct; decode/resize/frame-sample
-run as pandas-batch functions so the bytes never round-trip per-row.  The
-actual media codecs aren't in this container, so the decode step is a
-clearly-marked stub (`decode_stub`) — everything Spark-side (schema,
-partition shape, Arrow batch plumbing, deterministic fake features) is real
-and tested.
+run as pandas-batch functions so the bytes never round-trip per-row.
 
 Scale notes: ``mapInPandas`` streams Arrow batches (bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``) so executor memory is
@@ -41,17 +37,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("content_md5", T.StringType()),
     ]
 )
-
-
-def decode_stub(payload: bytes) -> object:
-    """Placeholder for the real media decode (PIL / libav / etc. are not in
-    this container).  Raise loudly so nobody mistakes the stub for a codec.
-    For images, :func:`decode_image` is the real path: PIL when present,
-    dependency-free PPM/PGM/BMP parsers otherwise."""
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in this "
-        "environment; wire PIL/av here in production"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -206,8 +191,7 @@ def resize_image(
     index maps (PIL-free), re-encoded as binary PPM with metadata dims
     updated.  Undecodable rows pass through unchanged with
     ``decode_error`` set — same quarantine contract as
-    :func:`image_features`.  `resize_stub` remains the codec-less
-    deterministic stand-in for formats this cannot decode."""
+    :func:`image_features`."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, binary_df.schema[id_col].dataType),
@@ -368,16 +352,6 @@ class bounded_media_reader:
         for k, v in self._saved.items():
             conf.set(k, v)
         return False
-
-
-def bound_media_session(
-    spark, sample_path: str,
-    target_batch_bytes: int = MEDIA_READER_BATCH_BYTES,
-) -> None:
-    """Set the bytes-bounded reader confs for the REST OF THE SESSION —
-    for CLI verbs whose process exits after the media pipeline, where
-    restoring the confs would be dead code."""
-    bounded_media_reader(spark, sample_path, target_batch_bytes).__enter__()
 
 
 def extract_features(binary_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -764,48 +738,75 @@ def hamming_band_pairs(
     )
 
 
-def _pin(df: DataFrame, checkpoint: bool) -> DataFrame:
-    """Pin a frame that is consumed by several downstream stages.
+def _family_dedup_flags(
+    fp: DataFrame,
+    key_col: str,
+    flag_name: str,
+    pairs_of,
+    usable=None,
+    count_reps: bool = False,
+) -> DataFrame:
+    """The one skeleton behind every media near-dup pipeline: each
+    ``*_dedup_flags`` supplies only its pair generator.
 
-    ``checkpoint=True`` (default): ``localCheckpoint(eager=True)`` —
-    executor MEMORY_AND_DISK blocks, lineage truncated.  Right when the
-    pinned frame is small (the hash frames here are O(rows) scalar
-    fingerprints / sub-fingerprint sets, orders of magnitude below the
-    payload corpus).
+    ``fp``: ``(doc_id, <key_col>, decode_error)`` fingerprint frame.
+    Rows passing ``usable`` (default: decoded) collapse to one min-id
+    representative per IDENTICAL fingerprint in ONE shuffle, so a ball
+    of identical fingerprints never reaches the pair join;
+    ``pairs_of(reps, n_reps)`` returns the ``(id_a, id_b)`` near-dup
+    edges between representatives (``reps``: ``(<key_col>, rep_id)``);
+    connected components close the families transitively and every
+    input row comes back with ``<flag_name>``: true iff a lower-id row
+    in its family exists — that lowest id is the kept representative.
+    Rows outside ``usable`` are never flagged.
 
-    ``checkpoint=False``: eager DISK_ONLY persist — the 100 TB-shape
-    knob.  Never occupies executor heap, so a large pinned stage cannot
-    evict shuffle or broadcast blocks (the round-10 sf5 `video_dedup`
-    eviction artifact, BASELINE.md r10); lineage is kept, so blocks
-    lost to executor churn recompute from the source parquet instead
-    of failing the job.  Costs one disk round-trip per consumer read.
-    """
-    if checkpoint:
-        return df.localCheckpoint(eager=True)
+    Pins: the fingerprint frame is consumed three times (exact stage,
+    flags join, rep mapping), so it is ``localCheckpoint``-ed — it runs
+    the Python hashing UDF once, and it is O(rows) scalars or small
+    arrays, orders of magnitude below the payload corpus.  ``reps`` is
+    consumed by the pair generator and the rep mapping, so it is pinned
+    too: ``localCheckpoint`` by default, or — with ``count_reps``, for
+    generators that need the distinct count — ``persist`` + ``count``,
+    one job that both materializes the pin and returns ``n_reps``
+    (``None`` otherwise)."""
     from pyspark import StorageLevel
 
-    df = df.persist(StorageLevel.DISK_ONLY)
-    df.count()  # materialize now: every consumer reads blocks, not lineage
-    return df
+    from paradump_spark.operators.dedup import connected_components
 
-
-def _pin_counted(df: DataFrame, checkpoint: bool) -> tuple:
-    """:func:`_pin` variant for frames whose ROW COUNT the caller needs
-    anyway (the band-key level decision): persist + one count job both
-    materializes the pin and returns the count — fusing what used to be
-    a pin job plus a separate count job into one driver submission
-    (round 12, VERDICT r11 item 1: at bench scale the ~0.15-0.3 s/job
-    floor was most of each media query's wall clock).  ``checkpoint``
-    picks the storage level exactly like :func:`_pin` (True → executor
-    memory-and-disk, False → DISK_ONLY, the 100 TB shape); lineage is
-    kept either way, which only matters if blocks are evicted (they
-    recompute from the source instead of failing)."""
-    from pyspark import StorageLevel
-
-    df = df.persist(
-        StorageLevel.MEMORY_AND_DISK if checkpoint else StorageLevel.DISK_ONLY
+    h = fp.localCheckpoint(eager=True)
+    if usable is None:
+        usable = F.col("decode_error").isNull()
+    reps = h.where(usable).groupBy(key_col).agg(
+        F.min("doc_id").alias("rep_id")
     )
-    return df, df.count()
+    if count_reps:
+        reps = reps.persist(StorageLevel.MEMORY_AND_DISK)
+        n_reps = reps.count()
+    else:
+        reps, n_reps = reps.localCheckpoint(eager=True), None
+    # no vertices: the fam join below is a LEFT join + coalesce to
+    # rep_id, so labels for edge ids alone are sufficient — an isolated
+    # rep coalesces to itself exactly as a self-labeled vertex would.
+    # Under the driver-CC cap this makes comp a LOCAL frame: no vertex
+    # union/distinct exchange, and the fam join broadcasts (round 12,
+    # VERDICT r11 item 1 — each removed exchange is one fewer AQE
+    # stage job at the ~0.15-0.3 s driver submission floor).
+    comp = connected_components(pairs_of(reps, n_reps))
+    fam = reps.join(
+        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
+    ).select(
+        key_col,
+        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
+    )
+    return h.join(fam, key_col, "left").select(
+        F.col("doc_id"),
+        F.col(key_col),
+        (
+            F.col("__keeper").isNotNull()
+            & (F.col("doc_id") != F.col("__keeper"))
+        ).alias(flag_name),
+        F.col("decode_error"),
+    )
 
 
 def perceptual_dedup_flags(
@@ -813,7 +814,6 @@ def perceptual_dedup_flags(
     max_hamming: int = 4,
     flag_name: str = "is_dup",
     hash_col: str = "phash",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Shared Hamming-near-dup pipeline over any 64-bit fingerprint
     frame ``(doc_id, <hash_col>, decode_error)`` — the media-agnostic
@@ -831,49 +831,22 @@ def perceptual_dedup_flags(
     crosses :data:`HAMMING_WIDE_KEYS_MIN` — see
     :func:`hamming_band_pairs`) → large-star/small-star connected
     components over rep edges (≤ 2·log₂ n rounds).  No cartesian, no
-    per-pair Python.
+    per-pair Python.  Skeleton at :func:`_family_dedup_flags`.
     """
-    from paradump_spark.operators.dedup import connected_components
 
-    # the hash table is consumed three times (exact stage, flags join,
-    # rep mapping) — pin it so the Python hashing UDF runs once
-    h = _pin(hashed, checkpoint)
-    ok = h.where(F.col("decode_error").isNull())
-    # reps is consumed three times too (count, band join, rep mapping);
-    # pinning keeps the exact-stage shuffle single-run, and the fused
-    # pin+count returns the distinct count — which picks the band-key
-    # level — without a second job submission
-    reps, n_reps = _pin_counted(
-        ok.groupBy(hash_col).agg(F.min("doc_id").alias("rep_id")),
-        checkpoint,
-    )
-    sub = choose_hamming_sub_bands(reps, hash_col, max_hamming, n_rows=n_reps)
-    pairs = hamming_band_pairs(
-        reps.select(F.col("rep_id").alias("doc_id"), hash_col),
-        "doc_id", hash_col, max_hamming, sub_bands=sub,
-    )
-    # no vertices: the fam join below is a LEFT join + coalesce to
-    # rep_id, so labels for edge ids alone are sufficient — an isolated
-    # rep coalesces to itself exactly as a self-labeled vertex would.
-    # Under the driver-CC cap this makes comp a LOCAL frame: no vertex
-    # union/distinct exchange, and the fam join broadcasts (round 12,
-    # VERDICT r11 item 1 — each removed exchange is one fewer AQE
-    # stage job at the ~0.15-0.3 s driver submission floor).
-    comp = connected_components(pairs.select("id_a", "id_b"))
-    fam = reps.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).select(
-        hash_col,
-        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
-    )
-    return h.join(fam, hash_col, "left").select(
-        F.col("doc_id"),
-        F.col(hash_col),
-        (
-            F.col("__keeper").isNotNull()
-            & (F.col("doc_id") != F.col("__keeper"))
-        ).alias(flag_name),
-        F.col("decode_error"),
+    def pairs_of(reps, n_reps):
+        # the fused pin+count returns the distinct count — which picks
+        # the band-key level — without a second job submission
+        sub = choose_hamming_sub_bands(
+            reps, hash_col, max_hamming, n_rows=n_reps
+        )
+        return hamming_band_pairs(
+            reps.select(F.col("rep_id").alias("doc_id"), hash_col),
+            "doc_id", hash_col, max_hamming, sub_bands=sub,
+        )
+
+    return _family_dedup_flags(
+        hashed, hash_col, flag_name, pairs_of, count_reps=True
     )
 
 
@@ -882,7 +855,6 @@ def signature_set_dedup_flags(
     flag_name: str = "is_dup",
     min_matches: int = 4,
     max_df: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Set-matched near-dup pipeline over SUB-fingerprint arrays — the
     time-offset-robust half of the media dedup family (round 10,
@@ -906,64 +878,47 @@ def signature_set_dedup_flags(
     exactly the hot keys that would make the join output quadratic;
     the cap bounds per-key join output at ``max_df²`` — → shared-count
     aggregation → threshold → large-star/small-star CC.  No cartesian,
-    no per-pair Python."""
-    from paradump_spark.operators.dedup import connected_components
+    no per-pair Python.  Skeleton at :func:`_family_dedup_flags`."""
 
-    h = _pin(sig_df, checkpoint)
-    ok = h.where(F.col("decode_error").isNull() & (F.size("sig") > 0))
-    reps = _pin(
-        ok.groupBy("sig").agg(F.min("doc_id").alias("rep_id")),
-        checkpoint,
-    )
-    elems = reps.select(
-        F.col("rep_id"),
-        F.size("sig").alias("__n"),
-        F.explode("sig").alias("__v"),
-    )
-    # df-cap: the hot-value list is tiny by construction (≤ one row per
-    # value above the cap) — broadcast anti-join
-    hot = (
-        elems.groupBy("__v")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .where(F.col("__df") > max_df)
-        .select("__v")
-    )
-    elems = elems.join(F.broadcast(hot), "__v", "left_anti")
-    a = elems.select(
-        "__v", F.col("rep_id").alias("id_a"), F.col("__n").alias("__na")
-    )
-    b = elems.select(
-        "__v", F.col("rep_id").alias("id_b"), F.col("__n").alias("__nb")
-    )
-    shared = (
-        a.join(b, "__v")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "__na", "__nb")
-        .agg(F.count(F.lit(1)).alias("__shared"))
-    )
-    # cap the threshold by the smaller set so short clips can merge
-    # (the video_dedup_flags short-signature precedent, ADVICE r09)
-    eff_min = F.least(
-        F.col("__na"), F.col("__nb"), F.lit(min_matches)
-    )
-    edges = shared.where(F.col("__shared") >= eff_min).select("id_a", "id_b")
-    # no vertices — see perceptual_dedup_flags: the left join + coalesce
-    # below only needs edge-id labels
-    comp = connected_components(edges)
-    fam = reps.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).select(
-        "sig",
-        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
-    )
-    return h.join(fam, "sig", "left").select(
-        F.col("doc_id"),
-        F.col("sig"),
-        (
-            F.col("__keeper").isNotNull()
-            & (F.col("doc_id") != F.col("__keeper"))
-        ).alias(flag_name),
-        F.col("decode_error"),
+    def pairs_of(reps, _n_reps):
+        elems = reps.select(
+            F.col("rep_id"),
+            F.size("sig").alias("__n"),
+            F.explode("sig").alias("__v"),
+        )
+        # df-cap: the hot-value list is tiny by construction (≤ one row
+        # per value above the cap) — broadcast anti-join
+        hot = (
+            elems.groupBy("__v")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .where(F.col("__df") > max_df)
+            .select("__v")
+        )
+        elems = elems.join(F.broadcast(hot), "__v", "left_anti")
+        a = elems.select(
+            "__v", F.col("rep_id").alias("id_a"), F.col("__n").alias("__na")
+        )
+        b = elems.select(
+            "__v", F.col("rep_id").alias("id_b"), F.col("__n").alias("__nb")
+        )
+        shared = (
+            a.join(b, "__v")
+            .where(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b", "__na", "__nb")
+            .agg(F.count(F.lit(1)).alias("__shared"))
+        )
+        # cap the threshold by the smaller set so short clips can merge
+        # (the video_dedup_flags short-signature precedent, ADVICE r09)
+        eff_min = F.least(
+            F.col("__na"), F.col("__nb"), F.lit(min_matches)
+        )
+        return shared.where(F.col("__shared") >= eff_min).select(
+            "id_a", "id_b"
+        )
+
+    return _family_dedup_flags(
+        sig_df, "sig", flag_name, pairs_of,
+        usable=F.col("decode_error").isNull() & (F.size("sig") > 0),
     )
 
 
@@ -972,7 +927,6 @@ def image_dedup_flags(
     id_col: str = "doc_id",
     algo: str = "dhash",
     max_hamming: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_image_dup``: true iff a lower-id image in
     the same near-dup family (transitive closure of Hamming ≤
@@ -982,9 +936,7 @@ def image_dedup_flags(
     :func:`perceptual_dedup_flags`.
     """
     h = image_perceptual_hash(binary_df, id_col, algo)
-    return perceptual_dedup_flags(
-        h, max_hamming, "is_image_dup", checkpoint=checkpoint
-    )
+    return perceptual_dedup_flags(h, max_hamming, "is_image_dup")
 
 
 def synthetic_image_corpus(
@@ -1047,104 +999,6 @@ def synthetic_image_corpus(
     return df.select(F.col(id_col)).mapInPandas(batches, out_schema)
 
 
-def sample_frames(
-    binary_df: DataFrame,
-    n_frames: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Frame sampling plumbing: each media row fans out to ``n_frames``
-    rows of (frame_idx, timestamp, frame bytes) — the 1→N Arrow-batch
-    shape a real video decoder fills in.  The decode itself is stubbed
-    with a deterministic fake (md5-keyed bytes, evenly spaced timestamps
-    over ``media_meta.duration_ms``) so tests pin schema, cardinality,
-    and determinism without codecs."""
-    if n_frames <= 0:
-        raise ValueError(f"n_frames must be positive, got {n_frames}")
-    # keep the caller's id column name AND type (string/long/... ids all work)
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, binary_df.schema[id_col].dataType),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_ms", T.LongType()),
-            T.StructField("frame_payload", T.BinaryType()),
-        ]
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            ids, idxs, tss, frames = [], [], [], []
-            for doc_id, payload, dur in zip(
-                pdf[id_col], pdf["payload"], pdf["duration_ms"]
-            ):
-                total = int(dur) if dur and dur > 0 else n_frames
-                for k in range(n_frames):
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    tss.append((k * total) // n_frames)
-                    # deterministic fake "decoded frame": keyed digest bytes
-                    frames.append(
-                        hashlib.md5(bytes(payload) + k.to_bytes(4, "big")).digest()
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_ms": pd.Series(tss, dtype="int64"),
-                    "frame_payload": frames,
-                }
-            )
-
-    src = binary_df.select(
-        F.col(id_col),
-        F.col("payload"),
-        F.col("media_meta.duration_ms").alias("duration_ms"),
-    )
-    return src.mapInPandas(batches, out_schema)
-
-
-def resize_stub(
-    binary_df: DataFrame, width: int, height: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Resize plumbing: payload → payload' with updated metadata dims.
-    The pixel work is a stub (deterministic digest bytes sized to the
-    target) — swap the inner function for PIL in production; the Spark
-    side (schema preservation, Arrow batching, metadata rewrite) is real."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("media_meta", MEDIA_META),
-        ]
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        fake_len = max(16, (width * height) // 64)  # stand-in byte budget
-        for pdf in it:
-            resized = [
-                (hashlib.md5(bytes(b)).digest() * (fake_len // 16 + 1))[:fake_len]
-                for b in pdf["payload"]
-            ]
-            metas = [
-                {
-                    "media_type": m["media_type"],
-                    "codec": m["codec"],
-                    "width": width,
-                    "height": height,
-                    "duration_ms": m["duration_ms"],
-                }
-                for m in pdf["media_meta"]
-            ]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"), "payload": resized, "media_meta": metas}
-            )
-
-    return binary_df.mapInPandas(batches, out_schema)
-
-
 def read_media_dir(
     spark,
     path: str,
@@ -1153,7 +1007,7 @@ def read_media_dir(
 ) -> DataFrame:
     """Real multimodal ingest: ``binaryFile`` source over a directory →
     the same (doc_id, payload, media_meta) shape :func:`extract_features`
-    / :func:`sample_frames` consume.
+    / :func:`sample_frames_real` consume.
 
     ``binaryFile`` streams each file's bytes as one row (path, length,
     modificationTime, content) — distributed, no driver involvement;
@@ -1457,7 +1311,6 @@ def audio_dedup_flags(
     binary_df: DataFrame,
     id_col: str = "doc_id",
     max_hamming: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_audio_dup``: true iff a lower-id clip in
     the same near-dup family (transitive Hamming ≤ ``max_hamming`` on
@@ -1467,9 +1320,7 @@ def audio_dedup_flags(
     at :func:`perceptual_dedup_flags` — one exact-hash shuffle, a
     Hamming-band equi-join over distinct fingerprints, then CC."""
     h = audio_perceptual_hash(binary_df, id_col)
-    return perceptual_dedup_flags(
-        h, max_hamming, "is_audio_dup", checkpoint=checkpoint
-    )
+    return perceptual_dedup_flags(h, max_hamming, "is_audio_dup")
 
 
 # --- time-offset-robust audio matching (round 10, VERDICT r09
@@ -1577,7 +1428,6 @@ def audio_robust_dedup_flags(
     min_matches: int = 4,
     seg_ms: int = 20,
     max_df: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_audio_dup``: TRIM/OFFSET-robust audio
     near-dup dedup — gain-scaled, resampled, requantized AND
@@ -1586,9 +1436,7 @@ def audio_robust_dedup_flags(
     min-id keeper).  Pipeline shape documented at
     :func:`signature_set_dedup_flags`."""
     sig = audio_robust_signatures(binary_df, id_col, seg_ms)
-    return signature_set_dedup_flags(
-        sig, "is_audio_dup", min_matches, max_df, checkpoint=checkpoint
-    )
+    return signature_set_dedup_flags(sig, "is_audio_dup", min_matches, max_df)
 
 
 def _encode_wav(samples, rate: int, bits: int = 16) -> bytes:
@@ -1774,8 +1622,7 @@ def sample_frames_real(
     decodable P6 PPM payloads with their index within the stream.
     Streams with fewer frames than requested yield what they have;
     undecodable payloads (including containers when PyAV is absent)
-    quarantine via ``decode_error``.  `sample_frames` remains the
-    deterministic-fake twin.
+    quarantine via ``decode_error``.
     """
     if n_frames <= 0:
         raise ValueError(f"n_frames must be positive, got {n_frames}")
@@ -1927,7 +1774,6 @@ def video_dedup_flags(
     n_frames: int = 8,
     max_hamming: int = 4,
     min_matching: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_video_dup``: true iff a lower-id video in
     the same near-dup family exists, where two videos are near-dups
@@ -1941,124 +1787,101 @@ def video_dedup_flags(
     Hamming-band equi-join over DISTINCT signatures only (shuffle is
     n_frames × bands rows per distinct signature) → zip_with slot
     verification in the JVM → large-star/small-star CC over rep edges.
+    Skeleton at :func:`_family_dedup_flags`.
     """
-    from paradump_spark.operators.dedup import connected_components
-
     if min_matching is None:
         min_matching = max(1, (3 * n_frames) // 4)
+
+    def pairs_of(reps, _n_reps):
+        # slot-aligned banding: (slot, band_idx, band_bits) keys; any
+        # pair with ≥1 slot inside the Hamming budget shares ≥1 such key
+        bands = max_hamming + 1
+        width = 64 // bands
+        slot_hash = F.col("__s.h")
+        bcols = []
+        for i in range(bands):
+            w = width if i < bands - 1 else 64 - width * (bands - 1)
+            seg = F.shiftrightunsigned(slot_hash, i * width).bitwiseAND(
+                F.lit((1 << w) - 1)
+            )
+            bcols.append(
+                F.struct(
+                    F.col("__s.slot").alias("slot"),
+                    F.lit(i).alias("i"),
+                    seg.alias("v"),
+                ).alias(f"__b{i}")
+            )
+        banded = (
+            reps.select(
+                "rep_id",
+                "sig",
+                F.explode(
+                    F.transform(
+                        F.col("sig"),
+                        lambda h, s: F.struct(s.alias("slot"), h.alias("h")),
+                    )
+                ).alias("__s"),
+            )
+            .select("rep_id", "sig", F.explode(F.array(*bcols)).alias("__band"))
+        )
+        a = banded.select(
+            F.col("__band"),
+            F.col("rep_id").alias("id_a"),
+            F.col("sig").alias("__sa"),
+        )
+        b = banded.select(
+            F.col("__band"),
+            F.col("rep_id").alias("id_b"),
+            F.col("sig").alias("__sb"),
+        )
+        matched = F.size(
+            F.filter(
+                F.zip_with(
+                    F.col("__sa"),
+                    F.col("__sb"),
+                    lambda x, y: F.bit_count(x.bitwiseXOR(y))
+                    <= F.lit(max_hamming),
+                ),
+                lambda ok_: ok_,
+            )
+        )
+        # A video shorter than n_frames sample positions emits a SHORTER
+        # signature (take = min(n_frames, total)); zip_with NULL-pads
+        # the tail, so `matched` can never exceed the shorter length.
+        # Cap the effective threshold by the shorter signature or two
+        # near-identical short clips could never satisfy a fixed
+        # ¾-of-n_frames predicate (ADVICE r09) — for equal-length
+        # signatures this is min_matching unchanged.
+        eff_min = F.least(
+            F.size(F.col("__sa")), F.size(F.col("__sb")), F.lit(min_matching)
+        )
+        # Verify BEFORE the distinct, and distinct on the bare id pair —
+        # mirroring hamming_band_pairs.  The old shape deduplicated
+        # candidate pairs FIRST, shuffling both full sig arrays per
+        # candidate (~16x the bytes of an id pair); on clique-heavy
+        # corpora (one near-dup family of m distinct "edited" signatures
+        # shares identical values in the unchanged slots, so per-band-key
+        # occupancy grows with m and candidates with m²) that
+        # array-carrying distinct dominated the sf5 leg (3-point ledger
+        # r11: exp 1.77).  zip_with slot verification is a cheap per-row
+        # JVM predicate — running it map-side on the join output and
+        # deduplicating verified bare pairs is the same final pair set
+        # (matched is a deterministic function of the joined row) with
+        # the heavy shuffle removed.  The merge hint is the
+        # hamming_band_pairs reasoning verbatim: banded sits downstream
+        # of the pinned reps frame, so Catalyst's size estimate is
+        # unreliable and must not pick a whole-corpus broadcast; SMJ
+        # spills both sides at any corpus size.
+        return (
+            a.join(b.hint("merge"), "__band")
+            .where(F.col("id_a") < F.col("id_b"))
+            .where(matched >= eff_min)
+            .select("id_a", "id_b")
+            .distinct()
+        )
+
     sig = video_signature(binary_df, id_col, n_frames)
-    # consumed three times (exact stage, flags join, rep mapping) —
-    # pin it so the Python hashing UDF runs once
-    sig = _pin(sig, checkpoint)
-    ok = sig.where(F.col("decode_error").isNull())
-    # reps is consumed four times (both band-join sides, CC vertices,
-    # rep mapping) — pin it like perceptual_dedup_flags does, or the
-    # exact-stage groupBy shuffle re-executes per consumer (round 11)
-    reps = _pin(
-        ok.groupBy("sig").agg(F.min("doc_id").alias("rep_id")), checkpoint
-    )
-    # slot-aligned banding: (slot, band_idx, band_bits) keys; any pair
-    # with ≥1 slot inside the Hamming budget shares ≥1 such key
-    bands = max_hamming + 1
-    width = 64 // bands
-    slot_hash = F.col("__s.h")
-    bcols = []
-    for i in range(bands):
-        w = width if i < bands - 1 else 64 - width * (bands - 1)
-        seg = F.shiftrightunsigned(slot_hash, i * width).bitwiseAND(
-            F.lit((1 << w) - 1)
-        )
-        bcols.append(
-            F.struct(
-                F.col("__s.slot").alias("slot"),
-                F.lit(i).alias("i"),
-                seg.alias("v"),
-            ).alias(f"__b{i}")
-        )
-    banded = (
-        reps.select(
-            "rep_id",
-            "sig",
-            F.explode(
-                F.transform(
-                    F.col("sig"),
-                    lambda h, s: F.struct(s.alias("slot"), h.alias("h")),
-                )
-            ).alias("__s"),
-        )
-        .select("rep_id", "sig", F.explode(F.array(*bcols)).alias("__band"))
-    )
-    a = banded.select(
-        F.col("__band"),
-        F.col("rep_id").alias("id_a"),
-        F.col("sig").alias("__sa"),
-    )
-    b = banded.select(
-        F.col("__band"),
-        F.col("rep_id").alias("id_b"),
-        F.col("sig").alias("__sb"),
-    )
-    matched = F.size(
-        F.filter(
-            F.zip_with(
-                F.col("__sa"),
-                F.col("__sb"),
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)) <= F.lit(max_hamming),
-            ),
-            lambda ok_: ok_,
-        )
-    )
-    # A video shorter than n_frames sample positions emits a SHORTER
-    # signature (take = min(n_frames, total)); zip_with NULL-pads the
-    # tail, so `matched` can never exceed the shorter length.  Cap the
-    # effective threshold by the shorter signature or two near-identical
-    # short clips could never satisfy a fixed ¾-of-n_frames predicate
-    # (ADVICE r09) — for equal-length signatures this is min_matching
-    # unchanged.
-    eff_min = F.least(
-        F.size(F.col("__sa")), F.size(F.col("__sb")), F.lit(min_matching)
-    )
-    # Verify BEFORE the distinct, and distinct on the bare id pair —
-    # mirroring hamming_band_pairs.  The old shape deduplicated
-    # candidate pairs FIRST, shuffling both full sig arrays per
-    # candidate (~16x the bytes of an id pair); on clique-heavy corpora
-    # (one near-dup family of m distinct "edited" signatures shares
-    # identical values in the unchanged slots, so per-band-key
-    # occupancy grows with m and candidates with m²) that array-carrying
-    # distinct dominated the sf5 leg (3-point ledger r11: exp 1.77).
-    # zip_with slot verification is a cheap per-row JVM predicate —
-    # running it map-side on the join output and deduplicating verified
-    # bare pairs is the same final pair set (matched is a deterministic
-    # function of the joined row) with the heavy shuffle removed.  The
-    # merge hint is the hamming_band_pairs reasoning verbatim: banded
-    # sits downstream of the pinned sig frame, so Catalyst's size
-    # estimate is unreliable and must not pick a whole-corpus broadcast;
-    # SMJ spills both sides at any corpus size.
-    pairs = (
-        a.join(b.hint("merge"), "__band")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(matched >= eff_min)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # no vertices — see perceptual_dedup_flags: the left join + coalesce
-    # below only needs edge-id labels
-    comp = connected_components(pairs)
-    fam = reps.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).select(
-        "sig",
-        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
-    )
-    return sig.join(fam, "sig", "left").select(
-        F.col("doc_id"),
-        F.col("sig"),
-        (
-            F.col("__keeper").isNotNull()
-            & (F.col("doc_id") != F.col("__keeper"))
-        ).alias("is_video_dup"),
-        F.col("decode_error"),
-    )
+    return _family_dedup_flags(sig, "sig", "is_video_dup", pairs_of)
 
 
 # --- time-offset-robust video matching (round 10, VERDICT r09
@@ -2139,7 +1962,6 @@ def video_robust_dedup_flags(
     min_matches: int = 4,
     stride: int = 1,
     max_df: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_video_dup``: TRIM/OFFSET-robust video
     near-dup dedup — a cut-down copy, or one with a prepended intro,
@@ -2149,9 +1971,7 @@ def video_robust_dedup_flags(
     dHash itself.  Pipeline shape documented at
     :func:`signature_set_dedup_flags`."""
     sig = video_frame_hash_signatures(binary_df, id_col, stride)
-    return signature_set_dedup_flags(
-        sig, "is_video_dup", min_matches, max_df, checkpoint=checkpoint
-    )
+    return signature_set_dedup_flags(sig, "is_video_dup", min_matches, max_df)
 
 
 def synthetic_audio_corpus_robust(

@@ -88,7 +88,8 @@ def test_single_tx_export_empty_table(spark, tmp_path):
 def test_connected_components_driver_path_equals_distributed(spark):
     """Round-11 small-graph escape: the bounded driver union-find must
     return exactly the distributed star rounds' labeling (including
-    vertices-only ids and string ids)."""
+    vertices-only ids, the vertices=None local-frame return over
+    self-loops and null ids, and string ids)."""
     import random
 
     rng = random.Random(7)
@@ -97,22 +98,29 @@ def test_connected_components_driver_path_equals_distributed(spark):
     ] + [(300, 300), (5, 5)]
     edges = spark.createDataFrame(edges_py, "id_a bigint, id_b bigint")
     verts = spark.createDataFrame([(999,), (3,)], "id bigint")
-    rounds_a, rounds_b = [], []
-    via_driver = {
-        (r["id"], r["component"])
-        for r in connected_components(
-            edges, verts, _rounds_out=rounds_a
-        ).collect()
-    }
-    via_stars = {
-        (r["id"], r["component"])
-        for r in connected_components(
-            edges, verts, _rounds_out=rounds_b, driver_edge_cap=0
-        ).collect()
-    }
-    assert rounds_a == [0]  # took the driver escape
-    assert rounds_b and rounds_b[0] >= 1  # took the star rounds
-    assert via_driver == via_stars
+    loose = spark.createDataFrame(
+        edges_py[:40] + [(400, 400), (401, None), (None, 7), (None, None)],
+        "id_a bigint, id_b bigint",
+    )
+    for case_edges, case_verts in ((edges, verts), (loose, None)):
+        rounds_a, rounds_b = [], []
+        via_driver = {
+            (r["id"], r["component"])
+            for r in connected_components(
+                case_edges, case_verts, _rounds_out=rounds_a
+            ).collect()
+        }
+        via_stars = {
+            (r["id"], r["component"])
+            for r in connected_components(
+                case_edges, case_verts, _rounds_out=rounds_b,
+                driver_edge_cap=0,
+            ).collect()
+        }
+        assert rounds_a == [0]  # took the driver escape
+        assert rounds_b and rounds_b[0] >= 1  # took the star rounds
+        assert via_driver == via_stars
+    assert {(400, 400), (401, 401), (None, None)} <= via_driver
 
     s_edges = spark.createDataFrame(
         [("b", "c"), ("a", "b"), ("x", "y")], "id_a string, id_b string"
@@ -121,4 +129,44 @@ def test_connected_components_driver_path_equals_distributed(spark):
         r["id"]: r["component"]
         for r in connected_components(s_edges).collect()
     }
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_connected_components_star_path_releases_edge_pin(spark, monkeypatch):
+    """The distributed path persists its edge pin for the cap check; it
+    must not still be cached once the call and one action are done (a
+    long-lived session would otherwise hold it forever)."""
+    from pyspark import StorageLevel
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    pinned = []
+    real_persist = ClassicDataFrame.persist
+
+    def spy(self, *args, **kwargs):
+        pinned.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "persist", spy)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    )
+    connected_components(edges, driver_edge_cap=0).collect()
+    assert pinned
+    assert all(df.storageLevel == StorageLevel.NONE for df in pinned)
+
+
+def test_connected_components_explicit_cap_kept_for_string_ids(spark):
+    """The string-id width factor shrinks only the module default cap: a
+    cap the caller passes is used exactly as given."""
+    edges = spark.createDataFrame(
+        [("b", "c"), ("a", "b"), ("x", "y")], "id_a string, id_b string"
+    )
+    rounds = []
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(
+            edges, _rounds_out=rounds, driver_edge_cap=3
+        ).collect()
+    }
+    assert rounds == [0]  # driver path at exactly n_edges
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}

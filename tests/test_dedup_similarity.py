@@ -125,66 +125,43 @@ def test_multimodal_features_match_expected(spark, sf_dir):
         assert feats[row["doc_id"]]["n_bytes"] == len(row["text"].encode())
 
 
-def test_multimodal_decode_stub_raises():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        MM.decode_stub(b"\x89PNG")
-
-
-def test_frame_sampling_shape_and_determinism(spark, sf_dir):
-    from paradump_spark.operators import multimodal as MM
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    media = MM.attach_binary_payload(docs, "doc_id", "text", media_type="video")
-    frames = MM.sample_frames(media, n_frames=4)
+def test_frame_sampling_shape_and_determinism(spark):
+    ids = spark.range(50).select(F.col("id").alias("doc_id"))
+    media = MM.synthetic_video_corpus(ids, "doc_id", n_frames=8)
+    frames = MM.sample_frames_real(media, n_frames=4)
     rows = frames.collect()
-    assert len(rows) == 50 * 4  # 1 -> N fan-out
-    assert frames.columns == ["doc_id", "frame_idx", "frame_ms", "frame_payload"]
+    assert frames.columns == [
+        "doc_id", "frame_idx", "stream_pos", "frame_payload", "decode_error"
+    ]
     per_doc = {}
     for r in rows:
         per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-    assert all(sorted(v) == [0, 1, 2, 3] for v in per_doc.values())
+    junk = {i for i in range(50) if i % 37 == 13}  # the corpus's junk rows
+    # 1 -> N fan-out; an undecodable stream keeps one quarantine row
+    assert len(rows) == 4 * (50 - len(junk)) + len(junk)
+    for doc_id, idxs in per_doc.items():
+        assert sorted(idxs) == ([None] if doc_id in junk else [0, 1, 2, 3])
     # deterministic payloads across runs
-    again = {(r["doc_id"], r["frame_idx"]): bytes(r["frame_payload"]) for r in rows}
+    again = {(r["doc_id"], r["frame_idx"]): r["frame_payload"] for r in rows}
     rerun = {
-        (r["doc_id"], r["frame_idx"]): bytes(r["frame_payload"])
-        for r in MM.sample_frames(media, n_frames=4).collect()
+        (r["doc_id"], r["frame_idx"]): r["frame_payload"]
+        for r in MM.sample_frames_real(media, n_frames=4).collect()
     }
     assert again == rerun
 
     import pytest
 
     with pytest.raises(ValueError):
-        MM.sample_frames(media, n_frames=0)
+        MM.sample_frames_real(media, n_frames=0)
 
 
-def test_resize_stub_rewrites_dims_and_preserves_schema(spark, sf_dir):
-    from paradump_spark.operators import multimodal as MM
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
-    media = MM.attach_binary_payload(docs, "doc_id", "text", media_type="image")
-    out = MM.resize_stub(media, width=64, height=64)
-    assert out.schema["media_meta"].dataType == MM.MEDIA_META
-    rows = out.collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert r["media_meta"]["width"] == 64 and r["media_meta"]["height"] == 64
-        assert r["media_meta"]["media_type"] == "image"  # rest of meta kept
-        assert len(bytes(r["payload"])) == max(16, (64 * 64) // 64)
-
-
-def test_frame_sampling_keeps_custom_id_name_and_type(spark, sf_dir):
-    """Regression: id column name/type must pass through sample_frames."""
-    from paradump_spark.operators import multimodal as MM
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(5)
-        .select(F.concat(F.lit("d-"), F.col("doc_id")).alias("file_id"), "text")
+def test_frame_sampling_keeps_custom_id_name_and_type(spark):
+    """Regression: id column name/type must pass through frame sampling."""
+    ids = spark.range(5).select(F.col("id").alias("doc_id"))
+    media = MM.synthetic_video_corpus(ids, "doc_id").select(
+        F.concat(F.lit("d-"), F.col("doc_id")).alias("file_id"), "payload"
     )
-    media = MM.attach_binary_payload(docs, "file_id", "text", media_type="video")
-    frames = MM.sample_frames(media, n_frames=2, id_col="file_id")
+    frames = MM.sample_frames_real(media, n_frames=2, id_col="file_id")
     assert frames.columns[0] == "file_id"
     rows = frames.collect()
     assert len(rows) == 10 and all(r["file_id"].startswith("d-") for r in rows)

@@ -433,39 +433,6 @@ def test_video_robust_corpus_planted(spark):
     assert all(rows[i].is_video_dup for i in cut + intro)
 
 
-def test_checkpoint_false_path_matches_default(spark):
-    """The 100 TB-shape knob (checkpoint=False: DISK_ONLY persists
-    instead of executor-heap localCheckpoints for the internal hash
-    pins, VERDICT r10 directive 10) is a storage decision, not a
-    semantic one — flags must match row-for-row on both pipeline
-    families (Hamming-band perceptual + set-matched robust)."""
-    ids = spark.range(50).selectExpr("id as doc_id")
-
-    img = MM.synthetic_image_corpus(ids, "doc_id", groups=8)
-    a = MM.image_dedup_flags(img, "doc_id").orderBy("doc_id").collect()
-    b = (
-        MM.image_dedup_flags(img, "doc_id", checkpoint=False)
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert a == b
-
-    vid = MM.synthetic_video_corpus_robust(ids, "doc_id", groups=8)
-    a = (
-        MM.video_robust_dedup_flags(vid, "doc_id")
-        .select("doc_id", "is_video_dup")
-        .orderBy("doc_id")
-        .collect()
-    )
-    b = (
-        MM.video_robust_dedup_flags(vid, "doc_id", checkpoint=False)
-        .select("doc_id", "is_video_dup")
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert a == b
-
-
 # ---------------------------------------------------------------------------
 # bytes-bounded media reads (round 11: the sf5 WAV corpus OOMed a 16 g
 # heap through the default 4096-row vectorized reader batches)

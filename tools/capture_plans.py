@@ -1,26 +1,24 @@
 """Capture `.explain("formatted")` output for declared queries into
-plans/r12/<name>_<tag>.txt — the optimization round's before/after plan
-evidence (the judge checks plan-shape claims against these files).
+plans/<round>/<name>_<tag>.txt — before/after plan evidence for
+plan-shape claims.
 
-Usage: python tools/r12_capture_plans.py <tag> [sf_dir] [names...]
-       (no names = every driver-window queries() entry)
+Usage: python tools/capture_plans.py <round> <tag> [sf_dir] [names...]
+       (no names = every queries() and extra_queries() entry)
 """
 
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as E  # noqa: E402
 from paradump_spark.session import build_session  # noqa: E402
 
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "plans", "r12")
-
 
 def main():
-    tag = sys.argv[1]
-    rest = sys.argv[2:]
+    round_, tag = sys.argv[1], sys.argv[2]
+    rest = sys.argv[3:]
     sf_dir = rest[0] if rest and "/" in rest[0] else "/root/testdata/sf0.01"
     names = [a for a in rest if "/" not in a]
 
@@ -30,7 +28,8 @@ def main():
     if names:
         qmap = {k: v for k, v in qmap.items() if k in names}
 
-    os.makedirs(OUT_DIR, exist_ok=True)
+    out_dir = os.path.join(ROOT, "plans", round_)
+    os.makedirs(out_dir, exist_ok=True)
     for name, fn in qmap.items():
         try:
             df = fn(spark, sf_dir)
@@ -39,7 +38,7 @@ def main():
             )
         except Exception as ex:  # noqa: BLE001
             plan = f"ERROR {type(ex).__name__}: {ex}"
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")

@@ -1,9 +1,10 @@
 """Round-12 media-pipeline probe: per-query wall time + Spark job count
 + shuffle bytes for the five bench media dedup steps, reproduced with
 the bench's exact session/corpus shape (scratch parquet, 1 MB splits,
-checkpoint=False, bounded reader).  Evidence harness for VERDICT r11
-directive 1 ("fewer driver job submissions") — run before and after a
-change; the job counts come from tools/jobstats.py (AppStatusStore).
+bounded reader).  Evidence harness for VERDICT r11 directive 1 ("fewer
+driver job submissions") — run before and after a change; the job
+counts come from perfbench.counters (AppStatusStore, read after
+draining the listener bus).
 
 Usage: python tools/r12_media_probe.py [runs] [queries...]
 """
@@ -18,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from paradump_spark.session import build_session  # noqa: E402
-from tools.jobstats import job_group  # noqa: E402
+from perfbench.counters import group_stats, set_job_group  # noqa: E402
 
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,39 +49,42 @@ def main():
     steps = {}
     img, imgb = corpus("img", MMOD.synthetic_image_corpus)
     steps["image_dedup"] = (imgb, lambda: MMOD.image_dedup_flags(
-        img, "doc_id", algo="dhash", max_hamming=4, checkpoint=False).count())
+        img, "doc_id", algo="dhash", max_hamming=4).count())
     aud, audb = corpus("aud", MMOD.synthetic_audio_corpus)
     steps["audio_dedup"] = (audb, lambda: MMOD.audio_dedup_flags(
-        aud, "doc_id", max_hamming=4, checkpoint=False).count())
+        aud, "doc_id", max_hamming=4).count())
     vid, vidb = corpus("vid", MMOD.synthetic_video_corpus)
     steps["video_dedup"] = (vidb, lambda: MMOD.video_dedup_flags(
-        vid, "doc_id", n_frames=8, checkpoint=False).count())
+        vid, "doc_id", n_frames=8).count())
     aur, aurb = corpus("aur", MMOD.synthetic_audio_corpus_robust)
     steps["audio_dedup_robust"] = (aurb, lambda: MMOD.audio_robust_dedup_flags(
-        aur, "doc_id", checkpoint=False).count())
+        aur, "doc_id").count())
     vir, virb = corpus("vir", MMOD.synthetic_video_corpus_robust)
     steps["video_dedup_robust"] = (virb, lambda: MMOD.video_robust_dedup_flags(
-        vir, "doc_id", checkpoint=False).count())
+        vir, "doc_id").count())
 
     out = {}
     try:
         for name, (bound, fn) in steps.items():
             if only and name not in only:
                 continue
-            walls, stats = [], None
+            walls = []
             for i in range(runs):
                 with bound:
                     t0 = time.time()
-                    with job_group(spark, f"{name}_{i}") as jg:
+                    set_job_group(spark, f"{name}_{i}")
+                    try:
                         fn()
+                    finally:
+                        set_job_group(spark, None)
                     walls.append(round(time.time() - t0, 3))
-                stats = jg.stats
+            stats = group_stats(spark, f"{name}_{runs - 1}")
             out[name] = {
                 "wall_median": sorted(walls)[len(walls) // 2],
                 "walls": walls,
-                "jobs": stats["jobs"],
-                "shuffle_read": stats["shuffle_read"],
-                "shuffle_write": stats["shuffle_write"],
+                "jobs": stats.jobs,
+                "shuffle_read_mb": round(stats.shuffle_read_mb, 3),
+                "shuffle_write_mb": round(stats.shuffle_write_mb, 3),
             }
             print(json.dumps({name: out[name]}))
     finally:
